@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import index_store
+
 
 def connected_components(
     edges: DataFrame,
@@ -884,31 +886,22 @@ def write_graph_index(
     matching buckets with no Exchange on the edge side when the probe
     frontier is bucketed alike — and broadcast-frontier probes (the
     common case) just scan buckets straight off disk with O(1)-lineage
-    plans, no localCheckpoint re-materialization per query.
+    plans, no localCheckpoint re-materialization per query.  An append
+    uses the table's stored bucket count.
     """
     cols = [F.col(src).alias("u"), F.col(dst).alias("v")]
     if weight is not None:
         cols.append(F.col(weight).cast("long").alias("w"))
     from .skew import write_bucketed
 
-    spark = edges.sparkSession
+    table = f"{name}_edges"
+    if mode == "append":
+        index_store.append(edges.select(*cols), table, "u", "u")
+        return
     if mode == "overwrite":
-        # Same stale-location sweep as write_minhash_index: the default
-        # in-memory catalog forgets tables across sessions but leaves
-        # their warehouse directories, and saveAsTable refuses to adopt
-        # an existing location [LOCATION_ALREADY_EXISTS].
-        warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        t = f"{name}_edges"
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        path = spark._jvm.org.apache.hadoop.fs.Path(
-            f"{warehouse}/{t.lower()}"
-        )
-        fs = path.getFileSystem(hconf)
-        if fs.exists(path):
-            fs.delete(path, True)
+        index_store.drop(edges.sparkSession, [table])
     write_bucketed(
-        edges.select(*cols), f"{name}_edges", "u",
+        edges.select(*cols), table, "u",
         num_buckets=num_buckets, sort_by="u", mode=mode,
     )
 

@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from . import index_store
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product of two array<double> columns."""
@@ -953,6 +955,19 @@ def _ivf_probe(
     )
 
 
+def _write_centroids(spark, name: str, cents) -> None:
+    """``{name}_centroids``: one (cell, centroid) row per coarse cell."""
+    spark.createDataFrame(
+        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
+        "cell int, centroid array<double>",
+    ).write.mode("overwrite").saveAsTable(f"{name}_centroids")
+
+
+def _read_centroids(spark, name: str) -> list[list[float]]:
+    rows = spark.table(f"{name}_centroids").collect()
+    return [list(r.centroid) for r in sorted(rows, key=lambda r: r.cell)]
+
+
 class IvfIndex(NamedTuple):
     """Handle to a persisted on-disk IVF index (see
     :func:`write_ivf_index`): the cell-bucketed inverted file, the
@@ -1003,7 +1018,8 @@ def write_ivf_index(
     a second quantizer's cell rows onto the first's, silently mixing
     incompatible cell ids.  Daily arrivals instead go through
     :func:`append_ivf_index`, which reuses the STORED centroids;
-    :func:`compact_ivf_index` handles the resulting small files.
+    :func:`compact_ivf_index` handles the resulting small files.  A bad
+    argument or a failed fit leaves the old index in place.
     """
     from .skew import write_bucketed
 
@@ -1015,17 +1031,10 @@ def write_ivf_index(
             "under a different quantizer would corrupt the index; "
             "append daily arrivals with append_ivf_index instead"
         )
-    if mode == "overwrite":
-        warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        hconf = spark.sparkContext._jsc.hadoopConfiguration()
-        for t in (f"{name}_cells", f"{name}_centroids", f"{name}_meta"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            path = spark._jvm.org.apache.hadoop.fs.Path(
-                f"{warehouse}/{t.lower()}"
-            )
-            fs = path.getFileSystem(hconf)
-            if fs.exists(path):
-                fs.delete(path, True)
+    if centroid_fit not in ("sample", "distributed", "hierarchical"):
+        raise ValueError(
+            f"write_ivf_index: unknown centroid_fit {centroid_fit!r}"
+        )
     if centroid_fit == "distributed":
         centroids = kmeans_distributed(
             corpus, k=n_centroids, id_col=id_col, vec_col=vec_col
@@ -1034,7 +1043,7 @@ def write_ivf_index(
         centroids = kmeans_hierarchical(
             corpus, k=n_centroids, id_col=id_col, vec_col=vec_col
         )
-    elif centroid_fit == "sample":
+    else:
         sample_rows = (
             corpus.select(id_col, vec_col)
             .orderBy(id_col)
@@ -1047,41 +1056,27 @@ def write_ivf_index(
             [np.asarray(r[1], dtype=np.float64) for r in sample_rows]
         )
         centroids = _kmeans_lite(sample, k=n_centroids)
-    else:
-        raise ValueError(
-            f"write_ivf_index: unknown centroid_fit {centroid_fit!r}"
-        )
     assigned = _ivf_assign(corpus, centroids, id_col, vec_col)
+    index_store.drop(
+        spark, (f"{name}_cells", f"{name}_centroids", f"{name}_meta")
+    )
     write_bucketed(
         assigned, f"{name}_cells",
         bucket_by="cell", num_buckets=num_buckets, sort_by="cell", mode=mode,
     )
-    spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-        "cell int, centroid array<double>",
-    ).write.mode(mode).saveAsTable(f"{name}_centroids")
-    spark.createDataFrame(
-        [(len(centroids), sample_size)], "n_centroids int, sample_size int"
-    ).write.mode(mode).saveAsTable(f"{name}_meta")
+    _write_centroids(spark, name, centroids)
+    index_store.write_meta(
+        spark, name, (len(centroids), sample_size),
+        "n_centroids int, sample_size int",
+    )
 
 
 def read_ivf_index(spark, name: str) -> IvfIndex:
     """Open a persisted IVF index written by :func:`write_ivf_index`."""
-    metas = spark.table(f"{name}_meta").collect()
-    if len(metas) != 1:
-        raise ValueError(
-            f"read_ivf_index: {name}_meta has {len(metas)} rows — the "
-            "index metadata was corrupted (a valid index has exactly "
-            "one; append_ivf_index never adds meta rows)"
-        )
-    meta = metas[0]
-    cents = spark.table(f"{name}_centroids").collect()
-    centroids = [
-        list(r.centroid) for r in sorted(cents, key=lambda r: r.cell)
-    ]
+    meta = index_store.read_meta(spark, name)
     return IvfIndex(
         assignments=spark.table(f"{name}_cells"),
-        centroids=centroids,
+        centroids=_read_centroids(spark, name),
         n_centroids=meta.n_centroids,
     )
 
@@ -1107,84 +1102,30 @@ def append_ivf_index(
     audit centroid drift as the appended distribution diverges from
     the one the quantizer was fit on.
     """
-    from .skew import write_bucketed
-
-    spark = new_vectors.sparkSession
-    idx = read_ivf_index(spark, name)
+    idx = read_ivf_index(new_vectors.sparkSession, name)
     centroids = np.asarray(idx.centroids, dtype=np.float64)
-    describe = spark.sql(f"DESCRIBE FORMATTED {name}_cells").collect()
-    info = {
-        r.col_name.strip(): (r.data_type or "").strip() for r in describe
-    }
-    num_buckets = int(info["Num Buckets"])
     assigned = _ivf_assign(new_vectors, centroids, id_col, vec_col)
-    write_bucketed(
-        assigned, f"{name}_cells",
-        bucket_by="cell", num_buckets=num_buckets, sort_by="cell",
-        mode="append",
-    )
+    index_store.append(assigned, f"{name}_cells", "cell", "cell")
 
 
 def compact_ivf_index(spark, name: str) -> dict[str, int]:
-    """Compact ``{name}_cells`` after daily appends — same contract and
-    same rename-out/rename-in swap as ``dedup.compact_minhash_index``:
-    one file per cell bucket, zero shuffle (forced bucketed scan), probe
-    results bit-identical before and after (test-pinned), recoverable
-    at every step (data lives under the public name, ``__old``, or
-    ``__compact``; nothing deleted before its replacement is live).
-    Centroids and meta are single-write tables and never need
-    compaction.  Returns ``{table: files_after}``."""
-    return _compact_cell_table(spark, f"{name}_cells")
+    """Compact ``{name}_cells`` after daily appends to one file per cell
+    bucket with :func:`.index_store.compact` — a single-writer
+    maintenance op whose swap and recovery contract the
+    :mod:`.index_store` docstring states; probe results are
+    bit-identical before and after (test-pinned).  Centroids and meta
+    are single-write tables and never need compaction.  Returns
+    ``{table: files_after}``."""
+    return index_store.compact(spark, f"{name}_cells", ["cell"])
 
 
 def compact_ivfpq_index(spark, name: str) -> dict[str, int]:
     """Compact ``{name}_codes`` after :func:`append_ivfpq_index`
-    batches — the identical one-file-per-bucket, zero-shuffle,
-    recoverable-swap recipe as :func:`compact_ivf_index` (probe
-    bit-identity across compaction is test-pinned).  Quantizer tables
-    are single-write and never need compaction."""
-    return _compact_cell_table(spark, f"{name}_codes")
-
-
-def _compact_cell_table(spark, table: str) -> dict[str, int]:
-    """One-file-per-bucket rewrite of a cell-bucketed table with the
-    rename-out/rename-in/drop-last swap (crash at any step leaves the
-    data live under the public name, ``__old``, or ``__compact``).
-    Single-writer batch op: the two-rename swap is not atomic, so
-    schedule compaction when no probes run or retry probes on
-    TABLE_OR_VIEW_NOT_FOUND — same operating contract as
-    ``compact_minhash_index`` (see its docstring for the view-based
-    alternative and why it is deliberately not used)."""
-    out: dict[str, int] = {}
-    cols = ["cell"]
-    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev_auto = spark.conf.get(auto_key, "true")
-    spark.conf.set(auto_key, "false")
-    try:
-        describe = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-        info = {
-            r.col_name.strip(): (r.data_type or "").strip()
-            for r in describe
-        }
-        num_buckets = int(info["Num Buckets"])
-        tmp, old = f"{table}__compact", f"{table}__old"
-        spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-        spark.sql(f"DROP TABLE IF EXISTS {old}")
-        (
-            spark.table(table)
-            .sortWithinPartitions(*cols)
-            .write.mode("overwrite")
-            .bucketBy(num_buckets, *cols)
-            .sortBy(*cols)
-            .saveAsTable(tmp)
-        )
-        spark.sql(f"ALTER TABLE {table} RENAME TO {old}")
-        spark.sql(f"ALTER TABLE {tmp} RENAME TO {table}")
-        spark.sql(f"DROP TABLE {old}")
-        out[table] = len(spark.table(table).inputFiles())
-    finally:
-        spark.conf.set(auto_key, prev_auto)
-    return out
+    batches with the same :func:`.index_store.compact` recipe as
+    :func:`compact_ivf_index` (probe bit-identity across compaction is
+    test-pinned).  Quantizer tables are single-write and never need
+    compaction."""
+    return index_store.compact(spark, f"{name}_codes", ["cell"])
 
 
 def ivf_cell_cohesion(spark, name: str) -> DataFrame:
@@ -2706,7 +2647,8 @@ def write_ivfpq_index(
     Lloyd rounds and the encode read it directly and quantize
     in-batch, so peak temporary footprint is ~d doubles per vector
     (plus the normalized-corpus Lloyd frame during the coarse fit
-    only), not a second fixed-point copy on top.
+    only), not a second fixed-point copy on top.  A bad argument or a
+    failed fit leaves the old index in place.
     """
     from .skew import write_bucketed
 
@@ -2717,16 +2659,12 @@ def write_ivfpq_index(
             "fresh build fits fresh quantizers; append daily arrivals "
             "with append_ivfpq_index instead"
         )
-    warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
-    for t in (
-        f"{name}_codes", f"{name}_centroids", f"{name}_books", f"{name}_meta"
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        path = spark._jvm.org.apache.hadoop.fs.Path(f"{warehouse}/{t.lower()}")
-        fs = path.getFileSystem(hconf)
-        if fs.exists(path):
-            fs.delete(path, True)
+    if codebook_fit not in ("distributed", "sample"):
+        raise ValueError(
+            f"write_ivfpq_index: unknown codebook_fit {codebook_fit!r}"
+        )
+    if m < 1 or ksub < 1:
+        raise ValueError("write_ivfpq_index: m and ksub must be >= 1")
     cents, books, assigned = _ivfpq_fit(
         corpus, n_centroids, m, ksub, sample_size, id_col, vec_col,
         codebook_fit=codebook_fit, return_assigned=True,
@@ -2739,6 +2677,10 @@ def write_ivfpq_index(
         coded = _ivfpq_encode(
             corpus, cents, books, id_col, vec_col, assigned=assigned
         )
+        index_store.drop(
+            spark,
+            [f"{name}_{t}" for t in ("codes", "centroids", "books", "meta")],
+        )
         write_bucketed(
             coded, f"{name}_codes",
             bucket_by="cell", num_buckets=num_buckets, sort_by="cell",
@@ -2747,10 +2689,7 @@ def write_ivfpq_index(
     finally:
         if assigned is not None:
             assigned.unpersist()
-    spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell int, centroid array<double>",
-    ).write.mode(mode).saveAsTable(f"{name}_centroids")
+    _write_centroids(spark, name, cents)
     spark.createDataFrame(
         [
             (j, c, [float(x) for x in books[j, c]])
@@ -2759,10 +2698,11 @@ def write_ivfpq_index(
         ],
         "subspace int, code int, centroid array<double>",
     ).write.mode(mode).saveAsTable(f"{name}_books")
-    spark.createDataFrame(
-        [(len(cents), int(books.shape[0]), int(books.shape[1]), sample_size)],
+    index_store.write_meta(
+        spark, name,
+        (len(cents), int(books.shape[0]), int(books.shape[1]), sample_size),
         "n_centroids int, m int, ksub int, sample_size int",
-    ).write.mode(mode).saveAsTable(f"{name}_meta")
+    )
 
 
 def read_ivfpq_index(spark, name: str):
@@ -2770,23 +2710,8 @@ def read_ivfpq_index(spark, name: str):
     centroids ndarray, books ndarray, meta Row)``.  Both quantizers
     are driver-sized by construction (n_centroids x d + m x ksub x
     d/m doubles)."""
-    metas = spark.table(f"{name}_meta").collect()
-    if len(metas) != 1:
-        raise ValueError(
-            f"read_ivfpq_index: {name}_meta has {len(metas)} rows — "
-            "corrupted (a valid index has exactly one; "
-            "append_ivfpq_index never adds meta rows)"
-        )
-    meta = metas[0]
-    cents = np.array(
-        [
-            list(r.centroid)
-            for r in sorted(
-                spark.table(f"{name}_centroids").collect(),
-                key=lambda r: r.cell,
-            )
-        ]
-    )
+    meta = index_store.read_meta(spark, name)
+    cents = np.array(_read_centroids(spark, name))
     brows = sorted(
         spark.table(f"{name}_books").collect(),
         key=lambda r: (r.subspace, r.code),
@@ -2811,19 +2736,9 @@ def append_ivfpq_index(
     are never re-read or re-encoded, and the quantizer tables are
     untouched, so every probe before and after sees the SAME
     quantizers (the append_ivf_index contract, compressed form)."""
-    from .skew import write_bucketed
-
-    spark = new_vectors.sparkSession
-    _, cents, books, _meta = read_ivfpq_index(spark, name)
-    describe = spark.sql(f"DESCRIBE FORMATTED {name}_codes").collect()
-    info = {r.col_name.strip(): (r.data_type or "").strip() for r in describe}
-    num_buckets = int(info["Num Buckets"])
+    _, cents, books, _meta = read_ivfpq_index(new_vectors.sparkSession, name)
     coded = _ivfpq_encode(new_vectors, cents, books, id_col, vec_col)
-    write_bucketed(
-        coded, f"{name}_codes",
-        bucket_by="cell", num_buckets=num_buckets, sort_by="cell",
-        mode="append",
-    )
+    index_store.append(coded, f"{name}_codes", "cell", "cell")
 
 
 def cosine_topk_ivfpq_indexed(

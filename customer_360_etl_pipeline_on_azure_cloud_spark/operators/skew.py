@@ -9,7 +9,7 @@ At 100 TB two join pathologies dominate wall-clock:
   build side ``salt`` times.
 * **re-shuffling stable tables** — two fact tables repeatedly joined on
   the same key should not pay a shuffle per query. Hive-bucketed tables
-  (:func:`write_bucketed` / :func:`read_bucketed_join_plan`) pre-hash
+  (:func:`write_bucketed` / :func:`bucketed_join`) pre-hash
   both sides into the same bucket layout so Spark plans the join with
   ZERO Exchange nodes.
 """

@@ -601,11 +601,23 @@ def test_persisted_index_matches_inmemory(spark, docs, persisted_index):
 def test_persisted_index_meta_mismatch_raises(spark, docs, persisted_index):
     from customer_360_etl_pipeline_on_azure_cloud_spark.operators.dedup import (
         minhash_lsh_join,
+        write_minhash_index,
     )
 
     new = docs.filter(F.col("doc_id") % 5 == 0)
     with pytest.raises(ValueError, match="probe params"):
         minhash_lsh_join(new, persisted_index, num_hashes=64, bands=16)
+    # an append under another hash configuration is refused before any
+    # write; a matching append adds no second meta row
+    n_sig = spark.table("t_mh_idx_sig").count()
+    with pytest.raises(ValueError, match="stored index"):
+        write_minhash_index(new, "t_mh_idx", num_hashes=64, bands=16,
+                            mode="append")
+    assert spark.table("t_mh_idx_sig").count() == n_sig
+    assert spark.table("t_mh_idx_meta").count() == 1
+    write_minhash_index(new.limit(0), "t_mh_idx", num_hashes=32, bands=8,
+                        mode="append")
+    assert spark.table("t_mh_idx_meta").count() == 1
 
 
 def test_persisted_index_probe_no_corpus_exchange(spark, docs, persisted_index):
